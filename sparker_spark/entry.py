@@ -1206,14 +1206,14 @@ def _register_ext() -> None:
     from sparker_spark.entry_r5 import r5_queries
 
     QUERIES.update(r5_queries())
-    # r6 queries: the builtin baseline JPEG codec under the value-hash
-    # gate — tail position like every post-r2 addition; the multimodal
-    # decode surface's in-window coverage is unchanged.
+    # r6 queries: quality-scored near-dup canonicalization, boilerplate
+    # removal and the exact kNN label vote — tail positions like every
+    # post-r2 addition.
     from sparker_spark.entry_r6 import r6_queries
 
     QUERIES.update(r6_queries())
-    # r7 queries: MJPEG-in-AVI frame decode, the IVF-routed kNN vote,
-    # and the length-skewed prefix-join bench sibling — tail positions
+    # r7 queries: the IVF-routed kNN vote, the length-skewed
+    # prefix-join bench sibling and sequence packing — tail positions
     # like every post-r2 addition; local oracle evidence in
     # TAIL_CHECKS.md.
     from sparker_spark.entry_r7 import r7_queries
@@ -1248,12 +1248,9 @@ def _register_ext() -> None:
     QUERIES.update(r11_queries())
     # r12 queries: the one-call corpus-dedup facade gated end-to-end
     # — tail position, local evidence in TAIL_CHECKS.md.
-    import os as _os
+    from sparker_spark.entry_r12 import r12_queries
 
-    if not _os.environ.get("SPARK_GRAFT_NO_R12"):
-        from sparker_spark.entry_r12 import r12_queries
-
-        QUERIES.update(r12_queries())
+    QUERIES.update(r12_queries())
     # The driver grades only the first 50 registry entries. Push the
     # queries whose operators are redundantly covered to the tail so
     # every operator's *sole* oracle query stays inside the window:

@@ -1,19 +1,13 @@
 """Round-7 gated queries.
 
-1. ``video_frame_features`` — real video frame DECODE under the
-   value-hash gate: MJPEG-in-AVI payloads (llm/avi.py RIFF container +
-   the builtin T.81 baseline JPEG codec per frame), consuming the same
-   (media_id, frame_ts_ms) work units ``frame_sample_plan`` emits.
-   Fixture + oracle follow the r6 JPEG gate's closed-form YCbCr
-   round-trip argument (entry_r6.py).
-2. ``knn_label_vote_ivf`` — the kNN label vote routed through
+1. ``knn_label_vote_ivf`` — the kNN label vote routed through
    ``IVFIndex.search`` (cell sketch, Hamming probe map, cell join)
    instead of the exact-anchor crossJoin. Probing ALL cells makes IVF
    recall provably 100 % for ANY input — the candidate set is the full
    relation — so the exact-kNN SQL oracle states the result while the
    Spark plan exercises the scale path's machinery end-to-end.
    (Partial-probe recall is covered by tests/test_similarity.py.)
-3. ``jaccard_prefix_join_skew`` — the PPJoin mechanism on a
+2. ``jaccard_prefix_join_skew`` — the PPJoin mechanism on a
    deterministically length-skewed corpus where the prefix + length
    filters do real pruning work. The original ``jaccard_prefix_join``
    fixture intentionally defeats pruning (near-all-pairs candidates;
@@ -25,120 +19,6 @@
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-# video fixture: 8x6 frames, 2 fps (500 ms per frame), 2..4 frames per
-# document, sampled every 500 ms — every frame lands on exactly one
-# sampled timestamp (ts = 500·i, frame_index_at(500·i) = i)
-VIDEO_W, VIDEO_H = 8, 6
-VIDEO_FPS = 2
-VIDEO_FRAME_MS = 1000 // VIDEO_FPS
-
-
-def _avi_fixture_media(spark, sf_dir):
-    """One AVI per document: 2 + doc_id % 3 solid-color quality-100
-    JPEG frames whose channels are arithmetic in (doc_id,
-    frame_index), built worker-side by the repo's own encoders."""
-    from sparker_spark.entry import _parallelize_scan, load
-
-    docs = _parallelize_scan(load(spark, sf_dir, "documents")).select(
-        F.col("doc_id").alias("media_id")
-    )
-
-    def make_avi(batches):
-        import numpy as np
-        import pandas as pd
-
-        from sparker_spark.llm import avi, jpeg
-
-        for pdf in batches:
-            payloads = []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                # oracle replays the modulo family with DuckDB's
-                # sign-preserving %; same non-negative contract as the
-                # r6 JPEG/WAV gates. The encoder-side YCbCr clamp
-                # corner needs an exact (255,0,0)/(0,0,255)/(255,255,
-                # 255) channel triple, and the coupled residues below
-                # admit none for i in 0..3 (the 90i ≡ c (mod 256)
-                # systems are unsolvable) — see entry_r6's note.
-                assert mid >= 0, "AVI gate fixture requires doc_id >= 0"
-                frames = []
-                for i in range(2 + mid % 3):
-                    img = np.zeros((VIDEO_H, VIDEO_W, 3), dtype=np.uint8)
-                    img[:, :, 0] = (mid + 17 * i) % 256
-                    img[:, :, 1] = (mid * 7 + 29 * i) % 256
-                    img[:, :, 2] = (mid * 13 + 31 * i) % 256
-                    frames.append(jpeg.encode(img, quality=100))
-                payloads.append(
-                    avi.encode_avi_mjpeg(
-                        frames, VIDEO_W, VIDEO_H, fps_num=VIDEO_FPS
-                    )
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    return docs.mapInPandas(
-        make_avi, schema="media_id long, payload binary"
-    )
-
-
-def q_video_frame_features(spark, sf_dir):
-    """MJPEG-in-AVI frame decode under the VALUE-HASH gate: each
-    document becomes a real AVI (llm/avi.encode_avi_mjpeg) of
-    2 + doc_id % 3 solid-color quality-100 JPEG frames whose channels
-    are arithmetic in (doc_id, frame_index), decoded back through
-    multimodal.video_frame_features (RIFF parse -> per-frame T.81
-    entropy decode -> IDCT -> color convert -> channel means). The
-    oracle replays the integer YCbCr round trip per frame in closed
-    form — the entire container+codec chain is value-checked."""
-    from sparker_spark.llm.multimodal import video_frame_features
-
-    media = _avi_fixture_media(spark, sf_dir)
-    feats = video_frame_features(media, every_ms=VIDEO_FRAME_MS)
-    byte = lambda c: F.round(F.col(c) * 255.0).cast("int")  # noqa: E731
-    return feats.select(
-        "media_id",
-        "frame_ts_ms",
-        "frame_index",
-        "width",
-        "height",
-        byte("mean_r").alias("r_byte"),
-        byte("mean_g").alias("g_byte"),
-        byte("mean_b").alias("b_byte"),
-    )
-
-
-O_VIDEO_FRAME_FEATURES = f"""
-WITH v AS (
-  SELECT doc_id AS media_id, 2 + doc_id % 3 AS n_frames FROM documents),
-fr AS (
-  SELECT media_id, unnest(generate_series(0, n_frames - 1)) AS i FROM v),
-rgb AS (
-  SELECT media_id, i,
-         CAST((media_id + 17 * i) % 256 AS DOUBLE) AS r,
-         CAST((media_id * 7 + 29 * i) % 256 AS DOUBLE) AS g,
-         CAST((media_id * 13 + 31 * i) % 256 AS DOUBLE) AS b
-  FROM fr),
-ycc AS (
-  SELECT media_id, i,
-         floor(0.299 * r + 0.587 * g + 0.114 * b + 0.5) AS y,
-         floor(-0.168736 * r - 0.331264 * g + 0.5 * b + 128.0 + 0.5) AS cb,
-         floor(0.5 * r - 0.418688 * g - 0.081312 * b + 128.0 + 0.5) AS cr
-  FROM rgb)
-SELECT media_id,
-       CAST(i * {VIDEO_FRAME_MS} AS BIGINT) AS frame_ts_ms,
-       CAST(i AS INTEGER) AS frame_index,
-       CAST({VIDEO_W} AS INTEGER) AS width,
-       CAST({VIDEO_H} AS INTEGER) AS height,
-       CAST(least(greatest(floor(y + 1.402 * (cr - 128.0) + 0.5),
-                           0), 255) AS INTEGER) AS r_byte,
-       CAST(least(greatest(floor(y - 0.344136 * (cb - 128.0)
-                                   - 0.714136 * (cr - 128.0) + 0.5),
-                           0), 255) AS INTEGER) AS g_byte,
-       CAST(least(greatest(floor(y + 1.772 * (cb - 128.0) + 0.5),
-                           0), 255) AS INTEGER) AS b_byte
-FROM ycc"""
 
 
 def q_knn_label_vote_ivf(spark, sf_dir):
@@ -227,260 +107,6 @@ FROM inter
 JOIN sizes s1 ON p1 = s1.doc_id
 JOIN sizes s2 ON p2 = s2.doc_id
 WHERE inter / (s1.n + s2.n - inter) >= {SETJOIN_SKEW_T}"""
-
-
-THUMB_W, THUMB_H = 4, 3
-
-
-def q_video_thumbnails(spark, sf_dir):
-    """The full video decode→resize→re-encode→decode chain under the
-    VALUE-HASH gate: the same AVI fixture as video_frame_features is
-    pushed through multimodal.video_thumbnails (frame sample →
-    nearest-neighbor resize to 4x3 → JPEG quality-100 re-encode), and
-    the query then DECODES each thumbnail payload back through the
-    registry's extract_features — so the gate value-checks two
-    complete encode/decode round trips. Solid frames make both trips
-    closed-form: the oracle applies the integer YCbCr round trip
-    TWICE, modeling the encoder-side clamp explicitly at every stage
-    (the stage-2 inputs are arbitrary [0,255] triples, so the r6
-    unreachability argument does not apply — the clamp is simply
-    stated in SQL instead)."""
-    from sparker_spark.llm.multimodal import (
-        extract_features,
-        video_thumbnails,
-    )
-
-    media = _avi_fixture_media(spark, sf_dir)
-    thumbs = video_thumbnails(
-        media, THUMB_W, THUMB_H, every_ms=VIDEO_FRAME_MS, quality=100
-    )
-    # frame_index < 8 always (≤4 frames per fixture video), so the
-    # packed id is collision-free and invertible
-    packed = thumbs.select(
-        (F.col("media_id") * 8 + F.col("frame_index")).alias("media_id"),
-        "payload",
-        F.lit("image/jpeg").alias("mime"),
-    )
-    feats = extract_features(packed)
-    byte = lambda i: F.round(  # noqa: E731
-        F.element_at("feature", i) * 255.0
-    ).cast("int")
-    return feats.select(
-        # integer `div`, not float division: exact at any id magnitude
-        F.expr("media_id div 8").alias("media_id"),
-        (F.col("media_id") % 8).cast("int").alias("frame_index"),
-        F.element_at("feature", 1).cast("int").alias("width"),
-        F.element_at("feature", 2).cast("int").alias("height"),
-        byte(3).alias("r_byte"),
-        byte(4).alias("g_byte"),
-        byte(5).alias("b_byte"),
-    )
-
-
-def _clamped_roundtrip_sql(r, g, b, out_prefix):
-    """SQL fragment: one encode(clamped forward YCbCr)+decode(clamped
-    inverse) round trip of a solid color — the exact arithmetic of
-    jpeg.encode/decode at quality 100 on DC-only content, term order
-    matching the numpy expressions."""
-    clamp = "least(greatest({x}, 0), 255)"
-    y = clamp.format(x=f"floor(0.299 * {r} + 0.587 * {g} + 0.114 * {b} + 0.5)")
-    cb = clamp.format(
-        x=f"floor(-0.168736 * {r} - 0.331264 * {g} + 0.5 * {b} + 128.0 + 0.5)"
-    )
-    cr = clamp.format(
-        x=f"floor(0.5 * {r} - 0.418688 * {g} - 0.081312 * {b} + 128.0 + 0.5)"
-    )
-    return (
-        f"{y} AS {out_prefix}y, {cb} AS {out_prefix}cb, {cr} AS {out_prefix}cr"
-    )
-
-
-O_VIDEO_THUMBNAILS = f"""
-WITH v AS (
-  SELECT doc_id AS media_id, 2 + doc_id % 3 AS n_frames FROM documents),
-fr AS (
-  SELECT media_id, unnest(generate_series(0, n_frames - 1)) AS i FROM v),
-rgb0 AS (
-  SELECT media_id, i,
-         CAST((media_id + 17 * i) % 256 AS DOUBLE) AS r,
-         CAST((media_id * 7 + 29 * i) % 256 AS DOUBLE) AS g,
-         CAST((media_id * 13 + 31 * i) % 256 AS DOUBLE) AS b
-  FROM fr),
-ycc1 AS (SELECT media_id, i, {_clamped_roundtrip_sql("r", "g", "b", "")}
-         FROM rgb0),
-rgb1 AS (
-  SELECT media_id, i,
-         least(greatest(floor(y + 1.402 * (cr - 128.0) + 0.5), 0), 255) AS r,
-         least(greatest(floor(y - 0.344136 * (cb - 128.0)
-                                - 0.714136 * (cr - 128.0) + 0.5), 0), 255) AS g,
-         least(greatest(floor(y + 1.772 * (cb - 128.0) + 0.5), 0), 255) AS b
-  FROM ycc1),
-ycc2 AS (SELECT media_id, i, {_clamped_roundtrip_sql("r", "g", "b", "")}
-         FROM rgb1)
-SELECT media_id,
-       CAST(i AS INTEGER) AS frame_index,
-       CAST({THUMB_W} AS INTEGER) AS width,
-       CAST({THUMB_H} AS INTEGER) AS height,
-       CAST(least(greatest(floor(y + 1.402 * (cr - 128.0) + 0.5),
-                           0), 255) AS INTEGER) AS r_byte,
-       CAST(least(greatest(floor(y - 0.344136 * (cb - 128.0)
-                                   - 0.714136 * (cr - 128.0) + 0.5),
-                           0), 255) AS INTEGER) AS g_byte,
-       CAST(least(greatest(floor(y + 1.772 * (cb - 128.0) + 0.5),
-                           0), 255) AS INTEGER) AS b_byte
-FROM ycc2"""
-
-
-def q_audio_flac_features(spark, sf_dir):
-    """The FLAC codec under the VALUE-HASH gate: the same square-wave
-    construction as the r6 WAV gate (entry_r6.q_audio_wav_features),
-    but the payload is a real FLAC stream built worker-side by
-    llm/flac.encode (fixed/constant subframes, rice residuals, CRCs)
-    and decoded back through the audio_samples dispatcher's FLAC
-    branch. FLAC is LOSSLESS, so the closed-form time-domain oracle
-    (RMS == amplitude, peak == amplitude, 2m−1 zero crossings) carries
-    over from the WAV gate with no new rounding argument — the gate
-    value-checks the entire entropy-decode + predictor-reconstruction
-    chain. Distinct arithmetic constants keep this row independent of
-    the WAV row."""
-    from sparker_spark.entry import _parallelize_scan, load
-    from sparker_spark.llm.audio import audio_features
-    from sparker_spark.rounding import rnd
-
-    docs = _parallelize_scan(load(spark, sf_dir, "documents")).select(
-        F.col("doc_id").alias("media_id")
-    )
-
-    def make_flac(batches):
-        import numpy as np
-        import pandas as pd
-
-        from sparker_spark.llm import flac
-
-        for pdf in batches:
-            payloads = []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                # same modulo-sign contract as the r6 gate fixtures
-                assert mid >= 0, "FLAC gate fixture requires doc_id >= 0"
-                half = 2 + mid % 11
-                period = 2 * half
-                m = 8 + mid % 5
-                amp = 700 + (mid * 17) % 27000
-                t = np.arange(m * period)
-                samples = np.where(t % period < half, amp, -amp)
-                payloads.append(flac.encode(samples, sample_rate=8000))
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    media = docs.mapInPandas(
-        make_flac, schema="media_id long, payload binary"
-    )
-    feats = audio_features(media)
-    return feats.select(
-        "media_id",
-        F.col("n_channels").cast("int").alias("n_channels"),
-        F.col("sample_rate").cast("int").alias("sample_rate"),
-        F.col("n_frames").cast("bigint").alias("n_frames"),
-        rnd("duration_s", 6).alias("duration_s"),
-        rnd("rms", 6).alias("rms"),
-        F.col("peak").cast("int").alias("peak"),
-        F.col("zero_crossings").cast("bigint").alias("zero_crossings"),
-    )
-
-
-O_AUDIO_FLAC = """
-WITH p AS (
-  SELECT doc_id AS media_id,
-         2 * (2 + doc_id % 11) AS period,
-         8 + doc_id % 5 AS m,
-         700 + (doc_id * 17) % 27000 AS amp
-  FROM documents)
-SELECT media_id,
-       CAST(1 AS INTEGER) AS n_channels,
-       CAST(8000 AS INTEGER) AS sample_rate,
-       CAST(m * period AS BIGINT) AS n_frames,
-       round(CAST(m * period AS DOUBLE) / 8000.0, 6) AS duration_s,
-       round(CAST(amp AS DOUBLE), 6) AS rms,
-       CAST(amp AS INTEGER) AS peak,
-       CAST(2 * m - 1 AS BIGINT) AS zero_crossings
-FROM p"""
-
-
-def q_multimodal_gif_features(spark, sf_dir):
-    """The GIF codec under the VALUE-HASH gate: each document becomes
-    a real multi-frame GIF (llm/gif.encode_gif — LZW, global color
-    table, animation blocks) of 1 + doc_id % 3 solid frames whose
-    first-frame palette color is arithmetic in doc_id, decoded back
-    through DecodeRegistry -> gif.decode (LZW decode + palette lookup
-    + compositing). GIF is LOSSLESS, so the oracle is the direct
-    modulo arithmetic — no color-space round trip to model."""
-    from sparker_spark.entry import _parallelize_scan, load
-    from sparker_spark.llm.multimodal import extract_features
-
-    docs = _parallelize_scan(load(spark, sf_dir, "documents")).select(
-        F.col("doc_id").alias("media_id")
-    )
-
-    def make_gif(batches):
-        import numpy as np
-        import pandas as pd
-
-        from sparker_spark.llm import gif
-
-        for pdf in batches:
-            payloads = []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                # same modulo-sign contract as the other media gates
-                assert mid >= 0, "GIF gate fixture requires doc_id >= 0"
-                palette = [
-                    (
-                        (mid + 31 * i) % 256,
-                        (mid * 5 + 37 * i) % 256,
-                        (mid * 11 + 41 * i) % 256,
-                    )
-                    for i in range(4)
-                ]
-                n_frames = 1 + mid % 3
-                frames = [
-                    np.full((5, 7), i % 4, dtype=np.uint8)
-                    for i in range(n_frames)
-                ]
-                payloads.append(gif.encode_gif(frames, palette))
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads,
-                 "mime": "image/gif"}
-            )
-
-    media = docs.mapInPandas(
-        make_gif, schema="media_id long, payload binary, mime string"
-    )
-    feats = extract_features(media)
-    byte = lambda i: F.round(  # noqa: E731
-        F.element_at("feature", i) * 255.0
-    ).cast("int")
-    return feats.select(
-        "media_id",
-        F.element_at("feature", 1).cast("int").alias("width"),
-        F.element_at("feature", 2).cast("int").alias("height"),
-        F.element_at("feature", 3).cast("int").alias("n_frames"),
-        byte(4).alias("r_byte"),
-        byte(5).alias("g_byte"),
-        byte(6).alias("b_byte"),
-    )
-
-
-O_MULTIMODAL_GIF = """
-SELECT doc_id AS media_id,
-       CAST(7 AS INTEGER) AS width,
-       CAST(5 AS INTEGER) AS height,
-       CAST(1 + doc_id % 3 AS INTEGER) AS n_frames,
-       CAST(doc_id % 256 AS INTEGER) AS r_byte,
-       CAST((doc_id * 5) % 256 AS INTEGER) AS g_byte,
-       CAST((doc_id * 11) % 256 AS INTEGER) AS b_byte
-FROM documents"""
 
 
 # ----------------------------------------- pretraining sequence packing
@@ -608,15 +234,11 @@ FROM plan GROUP BY seq_id"""
 
 def r7_queries() -> dict:
     return {
-        "video_frame_features": q_video_frame_features,
         "knn_label_vote_ivf": q_knn_label_vote_ivf,
         "jaccard_prefix_join_skew": q_jaccard_prefix_join_skew,
-        "audio_flac_features": q_audio_flac_features,
-        "video_thumbnails": q_video_thumbnails,
         "pack_sequences": q_pack_sequences,
         "pack_fill_stats": q_pack_fill_stats,
         "pack_texts": q_pack_texts,
-        "multimodal_gif_features": q_multimodal_gif_features,
     }
 
 
@@ -624,14 +246,10 @@ def r7_oracles() -> dict:
     from sparker_spark.entry_r6 import _o_knn_label_vote
 
     return {
-        "video_frame_features": O_VIDEO_FRAME_FEATURES,
         # full-probe IVF output == exact kNN output (see query doc)
         "knn_label_vote_ivf": _o_knn_label_vote(),
         "jaccard_prefix_join_skew": O_JACCARD_PREFIX_SKEW,
-        "audio_flac_features": O_AUDIO_FLAC,
-        "video_thumbnails": O_VIDEO_THUMBNAILS,
         "pack_sequences": O_PACK_SEQUENCES,
         "pack_fill_stats": O_PACK_FILL_STATS,
         "pack_texts": O_PACK_TEXTS,
-        "multimodal_gif_features": O_MULTIMODAL_GIF,
     }
