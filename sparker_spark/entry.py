@@ -1206,9 +1206,10 @@ def _register_ext() -> None:
     from sparker_spark.entry_r5 import r5_queries
 
     QUERIES.update(r5_queries())
-    # r6 queries: quality-scored near-dup canonicalization, boilerplate
-    # removal and the exact kNN label vote — tail positions like every
-    # post-r2 addition.
+    # r6 queries: the builtin baseline JPEG codec under the value-hash
+    # gate, the video frame-sampling plan, quality-scored near-dup
+    # canonicalization, boilerplate removal and the exact kNN label
+    # vote — tail positions like every post-r2 addition.
     from sparker_spark.entry_r6 import r6_queries
 
     QUERIES.update(r6_queries())

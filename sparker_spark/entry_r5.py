@@ -377,12 +377,86 @@ def q_stream_decontaminate(spark, sf_dir):
         return _drain(spark, out, sink, "append")
 
 
+# ------------------------------------- PNG codec under the gate
+def q_multimodal_png_features(spark, sf_dir):
+    """The multimodal decode path under the VALUE-HASH gate: each
+    document becomes a real 8x6 solid-color PNG (channel bytes are
+    arithmetic in doc_id), built worker-side with the repo's PNG
+    encoder inside Arrow-batched mapInPandas, then decoded back
+    through the registry's pure-numpy PNG decoder
+    (llm/multimodal.py extract_features -> decode_png: zlib inflate,
+    scanline unfilter, channel means). Solid color makes the decoded
+    means exact rationals the DuckDB oracle states in closed form —
+    so the full binary-column encode->decode round trip is
+    value-checked, not just row-counted."""
+    from pyspark.sql import functions as F  # noqa: F811
+
+    from sparker_spark.entry import _parallelize_scan, load
+    from sparker_spark.llm.multimodal import extract_features
+
+    # fan the single-file scan out so the python-side codec work is
+    # row-parallel instead of pinned to one Arrow worker
+    docs = _parallelize_scan(load(spark, sf_dir, "documents")).select(
+        F.col("doc_id").alias("media_id")
+    )
+
+    def make_png(batches):
+        import numpy as np
+        import pandas as pd
+
+        from sparker_spark.llm.multimodal import _png_encode_rgb
+
+        for pdf in batches:
+            payloads = []
+            for mid in pdf["media_id"]:
+                mid = int(mid)
+                img = np.zeros((6, 8, 3), dtype=np.uint8)
+                img[:, :, 0] = mid % 256
+                img[:, :, 1] = (mid * 7) % 256
+                img[:, :, 2] = (mid * 13) % 256
+                payloads.append(_png_encode_rgb(img))
+            yield pd.DataFrame(
+                {"media_id": pdf["media_id"], "payload": payloads,
+                 "mime": "image/png"}
+            )
+
+    media = docs.mapInPandas(
+        make_png, schema="media_id long, payload binary, mime string"
+    )
+    feats = extract_features(media)
+    # the feature array is float32 — recover the EXACT channel byte
+    # (mean*255 is within ~2e-5 of an integer for a solid image, far
+    # inside half-up rounding) instead of comparing a float32-mangled
+    # /255 fraction against the oracle's double
+    byte = lambda i: F.round(  # noqa: E731
+        F.element_at("feature", i) * 255.0
+    ).cast("int")
+    return feats.select(
+        "media_id",
+        F.element_at("feature", 1).cast("int").alias("width"),
+        F.element_at("feature", 2).cast("int").alias("height"),
+        byte(3).alias("r_byte"),
+        byte(4).alias("g_byte"),
+        byte(5).alias("b_byte"),
+    )
+
+
+O_MULTIMODAL_PNG = """
+SELECT doc_id AS media_id,
+       CAST(8 AS INTEGER) AS width, CAST(6 AS INTEGER) AS height,
+       CAST(doc_id % 256 AS INTEGER) AS r_byte,
+       CAST((doc_id * 7) % 256 AS INTEGER) AS g_byte,
+       CAST((doc_id * 13) % 256 AS INTEGER) AS b_byte
+FROM documents"""
+
+
 def r5_queries() -> dict:
     return {
         "stream_exact_dedup": q_stream_exact_dedup,
         "stream_event_windows": q_stream_event_windows,
         "stream_interval_join": q_stream_interval_join,
         "stream_decontaminate": q_stream_decontaminate,
+        "multimodal_png_features": q_multimodal_png_features,
     }
 
 
@@ -394,4 +468,5 @@ def r5_oracles() -> dict:
         "stream_event_windows": O_STREAM_EVENT_WINDOWS,
         "stream_interval_join": O_STREAM_INTERVAL_JOIN,
         "stream_decontaminate": _o_decontaminate(),
+        "multimodal_png_features": O_MULTIMODAL_PNG,
     }

@@ -1,11 +1,167 @@
-"""Round-6 gated queries: near-dup canonicalization by quality score,
-cross-corpus boilerplate-line removal, and the exact k-NN label vote —
-tail positions past the 50-entry grading window.
+"""Round-6 gated queries: the builtin baseline JPEG codec under the
+value-hash oracle.
+
+Same posture as the r5 PNG gate (entry_r5.q_multimodal_png_features):
+each document becomes a real solid-color JPEG built worker-side by the
+repo's spec-direct encoder, then decoded back through the registry's
+dependency-free baseline decoder (llm/jpeg.py: Huffman entropy decode,
+dequantize, IDCT, YCbCr->RGB). JPEG is lossy, but a solid-color
+quality-100 image is DC-only with unit quantization, so the decoded
+bytes are EXACTLY the integer YCbCr round trip of the input color —
+closed-form arithmetic the DuckDB oracle states with the same
+floor(x+0.5) rounding rule the codec uses (jpeg.py module docstring:
+numpy rint would round half-to-even, the oracle does not).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+
+
+def q_multimodal_jpeg_features(spark, sf_dir):
+    """Builtin JPEG decode path under the VALUE-HASH gate: encode an
+    8x6 solid-color baseline JPEG per document (channel bytes are
+    arithmetic in doc_id) inside Arrow-batched mapInPandas, decode
+    through DecodeRegistry -> decode_jpeg -> llm/jpeg.decode, and
+    emit the recovered channel bytes. The oracle replicates the
+    RGB->YCbCr->RGB integer round trip in closed form, so the entire
+    binary encode->entropy-decode->IDCT->color-convert chain is
+    value-checked, not just row-counted."""
+    from sparker_spark.entry import _parallelize_scan, load
+    from sparker_spark.llm.multimodal import extract_features
+
+    # the python-side entropy codec is the per-row cost here; a
+    # single-file scan would pin all 5000 payloads on ONE python
+    # worker (16 s at sf0.1 -> ~1.5 s at 32-way)
+    docs = _parallelize_scan(load(spark, sf_dir, "documents")).select(
+        F.col("doc_id").alias("media_id")
+    )
+
+    def make_jpeg(batches):
+        import numpy as np
+        import pandas as pd
+
+        from sparker_spark.llm import jpeg
+
+        for pdf in batches:
+            payloads = []
+            for mid in pdf["media_id"]:
+                mid = int(mid)
+                # the oracle replays this arithmetic with DuckDB's
+                # sign-preserving % — non-negative ids keep the two
+                # engines' modulo (and the unreachable encoder-side
+                # YCbCr clamp corner, see oracle comment) in sync
+                assert mid >= 0, "JPEG gate fixture requires doc_id >= 0"
+                img = np.zeros((6, 8, 3), dtype=np.uint8)
+                img[:, :, 0] = mid % 256
+                img[:, :, 1] = (mid * 7) % 256
+                img[:, :, 2] = (mid * 13) % 256
+                payloads.append(jpeg.encode(img, quality=100))
+            yield pd.DataFrame(
+                {"media_id": pdf["media_id"], "payload": payloads,
+                 "mime": "image/jpeg"}
+            )
+
+    media = docs.mapInPandas(
+        make_jpeg, schema="media_id long, payload binary, mime string"
+    )
+    feats = extract_features(media)
+    # feature array is float32; mean*255 of a solid image is within
+    # ~2e-5 of the exact integer byte — same recovery as the PNG gate
+    byte = lambda i: F.round(  # noqa: E731
+        F.element_at("feature", i) * 255.0
+    ).cast("int")
+    return feats.select(
+        "media_id",
+        F.element_at("feature", 1).cast("int").alias("width"),
+        F.element_at("feature", 2).cast("int").alias("height"),
+        byte(3).alias("r_byte"),
+        byte(4).alias("g_byte"),
+        byte(5).alias("b_byte"),
+    )
+
+
+# The oracle replays the codec's arithmetic: forward RGB->YCbCr with
+# floor(x+0.5) (jpeg.encode), DC-only quality-100 JPEG returns those
+# integer planes exactly (unit quant, DC = 8*(c-128), IDCT error
+# ~1e-13 « the 0.5 rounding margin), then inverse YCbCr->RGB with the
+# same rounding + clamp (jpeg.decode). Term order matches the numpy
+# expressions so both engines compute identical doubles.
+#
+# Domain notes pinned by the fixture-side `assert mid >= 0`:
+# (1) DuckDB % is sign-preserving while Python % is floored, so the
+#     modulo family below matches the fixture only for doc_id >= 0;
+# (2) jpeg.encode clips the forward YCbCr planes at [0, 255] and this
+#     oracle does NOT — the clip can only fire when floor(plane + 0.5)
+#     reaches 256 (e.g. cr at exactly (r,g,b)=(255,0,0)), and no
+#     (m%256, 7m%256, 13m%256) triple with m >= 0 reaches any such
+#     corner: the three residues are coupled mod 256, so the extreme
+#     channel combinations the clamp needs cannot co-occur.
+O_MULTIMODAL_JPEG = """
+WITH rgb AS (
+  SELECT doc_id AS media_id,
+         CAST(doc_id % 256 AS DOUBLE) AS r,
+         CAST((doc_id * 7) % 256 AS DOUBLE) AS g,
+         CAST((doc_id * 13) % 256 AS DOUBLE) AS b
+  FROM documents),
+ycc AS (
+  SELECT media_id,
+         floor(0.299 * r + 0.587 * g + 0.114 * b + 0.5) AS y,
+         floor(-0.168736 * r - 0.331264 * g + 0.5 * b + 128.0 + 0.5) AS cb,
+         floor(0.5 * r - 0.418688 * g - 0.081312 * b + 128.0 + 0.5) AS cr
+  FROM rgb)
+SELECT media_id,
+       CAST(8 AS INTEGER) AS width,
+       CAST(6 AS INTEGER) AS height,
+       CAST(least(greatest(floor(y + 1.402 * (cr - 128.0) + 0.5),
+                           0), 255) AS INTEGER) AS r_byte,
+       CAST(least(greatest(floor(y - 0.344136 * (cb - 128.0)
+                                   - 0.714136 * (cr - 128.0) + 0.5),
+                           0), 255) AS INTEGER) AS g_byte,
+       CAST(least(greatest(floor(y + 1.772 * (cb - 128.0) + 0.5),
+                           0), 255) AS INTEGER) AS b_byte
+FROM ycc"""
+
+
+def q_video_frame_plan(spark, sf_dir):
+    """Video frame-sampling plumbing under the gate: each document
+    becomes a video row with typed metadata (duration arithmetic in
+    doc_id), and llm/multimodal.frame_sample_plan expands it into
+    (media_id, frame_ts_ms) work units — pure column expressions over
+    the metadata struct, no decode (codec libs are stubbed in this
+    container; the plan layer is the Spark-side contract a real
+    frame extractor consumes row-parallel). The oracle replays the
+    stepped sequence with generate_series."""
+    from sparker_spark.entry import load
+    from sparker_spark.llm.multimodal import frame_sample_plan
+
+    docs = load(spark, sf_dir, "documents").select(
+        F.col("doc_id").alias("media_id"),
+        F.struct(
+            F.lit("video/mp4").alias("mime"),
+            F.lit(640).alias("width"),
+            F.lit(360).alias("height"),
+            # 0.5s .. 60s, exercising the < every_ms short-clip branch
+            ((F.col("doc_id") * 731) % 60000 + 500)
+            .cast("long")
+            .alias("duration_ms"),
+        ).alias("meta"),
+    )
+    return frame_sample_plan(docs, every_ms=1000).select(
+        "media_id", F.col("frame_ts_ms").cast("bigint").alias("frame_ts_ms")
+    )
+
+
+O_VIDEO_FRAME_PLAN = """
+WITH v AS (
+  SELECT doc_id AS media_id,
+         (doc_id * 731) % 60000 + 500 AS duration_ms
+  FROM documents)
+SELECT media_id, CAST(ts AS BIGINT) AS frame_ts_ms
+FROM v, LATERAL (
+  SELECT unnest(CASE WHEN duration_ms >= 1000
+                     THEN generate_series(0, duration_ms - 1, 1000)
+                     ELSE [0] END) AS ts)"""
 
 
 def q_dedup_keep_best(spark, sf_dir):
@@ -189,6 +345,8 @@ WHERE p.rn = 1 AND q.label IS NOT NULL"""
 
 def r6_queries() -> dict:
     return {
+        "multimodal_jpeg_features": q_multimodal_jpeg_features,
+        "video_frame_plan": q_video_frame_plan,
         "dedup_keep_best": q_dedup_keep_best,
         "curation_boilerplate": q_curation_boilerplate,
         "knn_label_vote": q_knn_label_vote,
@@ -197,6 +355,8 @@ def r6_queries() -> dict:
 
 def r6_oracles() -> dict:
     return {
+        "multimodal_jpeg_features": O_MULTIMODAL_JPEG,
+        "video_frame_plan": O_VIDEO_FRAME_PLAN,
         "dedup_keep_best": _o_dedup_keep_best(),
         "curation_boilerplate": O_CURATION_BOILERPLATE,
         "knn_label_vote": _o_knn_label_vote(),

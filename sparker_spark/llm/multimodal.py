@@ -438,97 +438,11 @@ def decode_jpeg(payload: bytes) -> list[float]:
     return [float(w), float(h), float(means[0]), float(means[1]), float(means[2])]
 
 
-def _jpeg_frame_stats(payload: bytes) -> tuple[int, int, "list[float]"]:
-    """(width, height, [mean_r, mean_g, mean_b] in [0, 1]) of one JPEG
-    frame — the single pixel-stats convention shared by the whole-file
-    AVI summary and the per-frame extractor (the value-hash gates pin
-    this exact arithmetic)."""
-    import numpy as np
-
-    from sparker_spark.llm import jpeg
-
-    img = jpeg.decode(payload)
-    if img.shape[2] == 1:
-        img = np.repeat(img, 3, axis=2)
-    means = img.reshape(-1, 3).astype(np.float64).mean(axis=0) / 255.0
-    return int(img.shape[1]), int(img.shape[0]), [float(m) for m in means]
-
-
-def decode_avi(payload: bytes) -> list[float]:
-    """MJPEG-in-AVI video decoder (llm/avi.py container parse + the
-    builtin baseline JPEG codec per frame). Whole-file summary feature:
-    ``[width, height, n_frames, duration_s, mean_r, mean_g, mean_b]``
-    with the channel means over the FIRST frame's pixels (dimensions
-    from the decoded frame, which is authoritative over the header).
-    Per-frame extraction goes through :func:`video_frame_features`."""
-    from sparker_spark.llm import avi
-
-    video = avi.parse_avi(payload)
-    w, h, means = _jpeg_frame_stats(video.frames[0])
-    return [
-        float(w),
-        float(h),
-        float(video.n_frames),
-        float(video.duration_ms) / 1000.0,
-        means[0],
-        means[1],
-        means[2],
-    ]
-
-
-def decode_flac(payload: bytes) -> list[float]:
-    """FLAC audio decoder (llm/flac.py — lossless, stdlib + numpy).
-    Same summary-feature contract as :func:`decode_wav`:
-    ``[n_channels, sample_rate, duration_s, mean_abs_amplitude]`` with
-    amplitude normalized to [0, 1] by the stream's sample-bit range,
-    so the same audio yields the same feature regardless of
-    container."""
-    import numpy as np
-
-    from sparker_spark.llm import flac
-
-    n_channels, sample_rate, frames = flac.decode(payload)
-    if frames.shape[0] == 0:
-        return [float(n_channels), float(sample_rate), 0.0, 0.0]
-    full_scale = float(1 << (flac.bits_per_sample(payload) - 1))
-    mean_abs = float(np.abs(frames.astype(np.float64)).mean() / full_scale)
-    return [
-        float(n_channels),
-        float(sample_rate),
-        frames.shape[0] / float(sample_rate),
-        mean_abs,
-    ]
-
-
-def decode_gif(payload: bytes) -> list[float]:
-    """GIF image/animation decoder (llm/gif.py — full LZW, interlace,
-    multi-frame compositing, transparency; lossless). Summary feature:
-    ``[width, height, n_frames, mean_r, mean_g, mean_b]`` with the
-    channel means over the FIRST composited frame in [0, 1]."""
-    import numpy as np
-
-    from sparker_spark.llm import gif
-
-    n_frames, img = gif.decode(payload)
-    means = img.reshape(-1, 3).astype(np.float64).mean(axis=0) / 255.0
-    return [
-        float(img.shape[1]),
-        float(img.shape[0]),
-        float(n_frames),
-        float(means[0]),
-        float(means[1]),
-        float(means[2]),
-    ]
-
-
 DecodeRegistry.register("", _fake_byte_histogram)  # default fallback
 DecodeRegistry.register("image/x-portable-pixmap", decode_ppm)
 DecodeRegistry.register("image/png", decode_png)
 DecodeRegistry.register("image/jpeg", decode_jpeg)
-DecodeRegistry.register("image/gif", decode_gif)
 DecodeRegistry.register("audio/wav", decode_wav)
-DecodeRegistry.register("audio/flac", decode_flac)
-DecodeRegistry.register("video/x-msvideo", decode_avi)
 
 
 def extract_features(
@@ -692,166 +606,12 @@ def frame_sample_plan(
     )
 
 
-VIDEO_FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_ts_ms", T.LongType()),
-        T.StructField("frame_index", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("mean_r", T.DoubleType()),
-        T.StructField("mean_g", T.DoubleType()),
-        T.StructField("mean_b", T.DoubleType()),
-    ]
-)
-
-
 def _nn_resize(img, tw: int, th: int):
     """Nearest-neighbor resample to (th, tw) with the integer grid
     ``(arange(target)·src)//target`` — the ONE resize convention the
-    value-hash gates pin, shared by resize_images and
-    video_thumbnails."""
+    value-hash gates pin."""
     import numpy as np
 
     ys = (np.arange(th) * img.shape[0]) // th
     xs = (np.arange(tw) * img.shape[1]) // tw
     return np.ascontiguousarray(img[ys][:, xs])
-
-
-def _map_video_frames(
-    media: DataFrame,
-    every_ms: int,
-    schema: T.StructType,
-    frame_fn,
-    id_col: str,
-    payload_col: str,
-    batch_rows: int,
-) -> DataFrame:
-    """Shared AVI frame-sampling harness behind Arrow-batched
-    mapInPandas: the container is parsed ONCE per payload, the sampled
-    timestamps are frame_sample_plan's sequence (``0, every_ms, ...``
-    below the clip's duration; a shorter clip contributes its first
-    frame), and ``frame_fn(video, frame_index) -> dict`` runs at most
-    once per DISTINCT frame however many timestamps land on it. One
-    output row per (media_id, frame_ts_ms) work unit; ``batch_rows``
-    bounds the per-chunk working set (video payloads are the largest
-    binaries this engine touches)."""
-    every = int(every_ms)
-    if every <= 0:
-        raise ValueError("every_ms must be positive")
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        from sparker_spark.llm import avi
-
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_rows):
-                chunk = pdf.iloc[start : start + batch_rows]
-                out: dict[str, list] = {f.name: [] for f in schema}
-                for mid, payload in zip(chunk[id_col], chunk[payload_col]):
-                    video = avi.parse_avi(bytes(payload))
-                    ts_list = list(range(0, video.duration_ms, every)) or [0]
-                    cache: dict = {}
-                    for ts in ts_list:
-                        idx = video.frame_index_at(ts)
-                        if idx not in cache:
-                            cache[idx] = frame_fn(video, idx)
-                        out["media_id"].append(int(mid))
-                        out["frame_ts_ms"].append(int(ts))
-                        out["frame_index"].append(idx)
-                        for k, v in cache[idx].items():
-                            out[k].append(v)
-                yield pd.DataFrame(out)
-
-    return media.select(id_col, payload_col).mapInPandas(run, schema=schema)
-
-
-def video_frame_features(
-    media: DataFrame,
-    every_ms: int = 1000,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-    batch_rows: int = 8,
-) -> DataFrame:
-    """Decode sampled frames from MJPEG-in-AVI payloads — the consumer
-    of :func:`frame_sample_plan`'s work units, fused with the decode
-    (see :func:`_map_video_frames` for the sampling/caching contract).
-    One row per (media_id, frame_ts_ms): frame dimensions +
-    per-channel pixel means in [0, 1]. Duration comes from the
-    container itself, so this accepts media rows with or without a
-    metadata struct."""
-
-    def frame_fn(video, idx):
-        w, h, means = _jpeg_frame_stats(video.frames[idx])
-        return {
-            "width": w,
-            "height": h,
-            "mean_r": means[0],
-            "mean_g": means[1],
-            "mean_b": means[2],
-        }
-
-    return _map_video_frames(
-        media, every_ms, VIDEO_FRAME_SCHEMA, frame_fn,
-        id_col, payload_col, batch_rows,
-    )
-
-
-THUMBNAIL_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_ts_ms", T.LongType()),
-        T.StructField("frame_index", T.IntegerType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ]
-)
-
-
-def video_thumbnails(
-    media: DataFrame,
-    width: int,
-    height: int,
-    every_ms: int = 1000,
-    quality: int = 90,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-    batch_rows: int = 8,
-) -> DataFrame:
-    """Video → per-frame JPEG thumbnails: the decode→transform→
-    re-encode composition over MJPEG-in-AVI payloads — frame sampling
-    as in :func:`video_frame_features`, nearest-neighbor resize with
-    the same integer grid as :func:`resize_images`, re-encoded as
-    baseline JPEG. One output row per (media_id, frame_ts_ms) work
-    unit: (payload, width, height) — the thumbnail relation a
-    multimodal training pipeline joins back to its documents.
-
-    Scale posture identical to the other media transforms: container
-    parsed once per payload, each distinct frame decoded and resized
-    at most once (sampled timestamps landing on the same frame reuse
-    the encoded thumbnail), Arrow-batched row-parallelism, no driver
-    state (see :func:`_map_video_frames`)."""
-    tw, th = int(width), int(height)
-    if tw <= 0 or th <= 0:
-        raise ValueError("target width/height must be positive")
-
-    def frame_fn(video, idx):
-        import numpy as np
-
-        from sparker_spark.llm import jpeg
-
-        img = jpeg.decode(video.frames[idx])
-        if img.shape[2] == 1:
-            img = np.repeat(img, 3, axis=2)
-        return {
-            "payload": jpeg.encode(_nn_resize(img, tw, th), quality=quality),
-            "width": tw,
-            "height": th,
-        }
-
-    return _map_video_frames(
-        media, every_ms, THUMBNAIL_SCHEMA, frame_fn,
-        id_col, payload_col, batch_rows,
-    )

@@ -1,10 +1,18 @@
-"""Tests for the Structured Streaming extensions (memory
-source/sink)."""
+"""Tests for the Structured Streaming extensions and multimodal
+plumbing (memory source/sink; deterministic fake decoder)."""
 
 import time
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from sparker_spark.llm.multimodal import (
+    MEDIA_META,
+    DecodeRegistry,
+    extract_features,
+    frame_sample_plan,
+)
 from sparker_spark.streaming.incremental import (
     incremental_blocking_keys,
     streaming_exact_dedup,
@@ -129,6 +137,88 @@ def test_windowed_event_counts(spark, tmp_path):
     assert rows[("2024-01-01 01:00:00", "view")] == (1, 3.0)
 
 
+def test_multimodal_extract_features(spark):
+    rows = [
+        # image/tiff has no registered codec -> byte-histogram fallback
+        # (image/png grew a REAL decoder in r5 — tests/test_png_codec.py)
+        (0, bytearray(b"\x00\x10\x20\x30"), "image/tiff"),
+        (1, bytearray(b"\xff" * 8), "audio/ogg"),  # no registered codec -> histogram
+    ]
+    media = spark.createDataFrame(rows, "media_id long, payload binary, mime string")
+    out = {r["media_id"]: r for r in extract_features(media).collect()}
+    assert out[0]["n_bytes"] == 4
+    # byte histogram: bytes 0x00,0x10,0x20,0x30 -> bins 0..3 each 0.25
+    assert out[0]["feature"][0] == pytest.approx(0.25)
+    assert out[1]["feature"][15] == pytest.approx(1.0)
+    assert len(out[0]["content_hash"]) == 32
+
+
+def test_ppm_decoder_end_to_end(spark):
+    """A real (dependency-free) codec through the DecodeRegistry plug
+    point: binary PPM rows decode via header parse + channel means,
+    while other mimes keep the default histogram — mixed in ONE
+    extract_features pass."""
+    # 2x2 P6 image, maxval 255, comment in header: pixels
+    # (255,0,0) (0,255,0) / (0,0,255) (255,255,255)
+    ppm = (
+        b"P6\n# test comment\n2 2\n255\n"
+        + bytes([255, 0, 0, 0, 255, 0, 0, 0, 255, 255, 255, 255])
+    )
+    rows = [
+        (0, bytearray(ppm), "image/x-portable-pixmap"),
+        # image/tiff has no codec -> default histogram (image/png has
+        # a real decoder since r5: tests/test_png_codec.py)
+        (1, bytearray(b"\x00\x10\x20\x30"), "image/tiff"),
+    ]
+    media = spark.createDataFrame(rows, "media_id long, payload binary, mime string")
+    out = {r["media_id"]: r for r in extract_features(media).collect()}
+    w, h, mr, mg, mb = out[0]["feature"]
+    assert (w, h) == (2.0, 2.0)
+    assert mr == pytest.approx(510 / (4 * 255))
+    assert mg == pytest.approx(510 / (4 * 255))
+    assert mb == pytest.approx(510 / (4 * 255))
+    # the tiff row still goes through the default byte histogram
+    assert len(out[1]["feature"]) == 16
+    assert out[1]["feature"][0] == pytest.approx(0.25)
+
+
+def test_ppm_decoder_rejects_garbage():
+    from sparker_spark.llm.multimodal import decode_ppm
+
+    with pytest.raises(ValueError):
+        decode_ppm(b"JFIF....")
+    with pytest.raises(ValueError):
+        decode_ppm(b"P6\n2 2\n255\n\x00\x01")  # truncated raster
+
+
+def test_decode_registry_unregistered():
+    saved = dict(DecodeRegistry._decoders)
+    try:
+        DecodeRegistry._decoders.clear()
+        with pytest.raises(NotImplementedError):
+            DecodeRegistry.decode("video/mp4", b"xx")
+    finally:
+        DecodeRegistry._decoders.update(saved)
+
+
+def test_frame_sample_plan(spark):
+    rows = [
+        (0, ("video/mp4", 640, 480, 3500)),
+        (1, ("video/mp4", 640, 480, 500)),
+    ]
+    media = spark.createDataFrame(
+        rows, T.StructType([
+            T.StructField("media_id", T.LongType()),
+            T.StructField("meta", MEDIA_META),
+        ])
+    )
+    out = sorted(
+        (r["media_id"], r["frame_ts_ms"])
+        for r in frame_sample_plan(media, every_ms=1000).collect()
+    )
+    assert out == [(0, 0), (0, 1000), (0, 2000), (0, 3000), (1, 0)]
+
+
 def test_streaming_sessionize_stateful(spark, tmp_path):
     """applyInPandasWithState sessionization: in-batch gap closes a
     session; the open tail session stays in state (append mode)."""
@@ -181,6 +271,20 @@ def test_streaming_sessionize_stateful(spark, tmp_path):
         (1, ts(0), ts(5), 2, 12.5),
         (2, ts(0), ts(0), 1, 7.0),
     }
+
+
+def test_arrow_batch_rows_restores_conf(spark):
+    from sparker_spark.llm.multimodal import _ARROW_BATCH_CONF, arrow_batch_rows
+
+    prev = spark.conf.get(_ARROW_BATCH_CONF, None)
+    rows = [(i, bytearray(bytes([i % 256]) * (i + 1)), "image/tiff") for i in range(10)]
+    media = spark.createDataFrame(rows, "media_id long, payload binary, mime string")
+    feats = extract_features(media, batch_rows=3)  # forces chunked batches
+    with arrow_batch_rows(spark, 4):
+        assert spark.conf.get(_ARROW_BATCH_CONF) == "4"
+        out = {r["media_id"]: r["n_bytes"] for r in feats.collect()}
+    assert out == {i: i + 1 for i in range(10)}
+    assert spark.conf.get(_ARROW_BATCH_CONF, None) == prev
 
 
 def test_streaming_countmin_equals_batch_sketch(spark, tmp_path):
@@ -250,6 +354,44 @@ def test_streaming_decontaminate_matches_batch(spark, tmp_path, sf_dir):
     }
     assert got == expected
     assert any(c for (_, _, _, c) in got)  # split contains real overlaps
+
+
+def test_wav_decoder_end_to_end(spark):
+    """A real dependency-free audio codec through DecodeRegistry:
+    PCM WAV rows decode via RIFF chunk parse while other mimes keep
+    their registered behavior — mixed in one extract_features pass."""
+    import struct
+
+    # 16-bit mono 8000 Hz, 4 frames: 0, +16384, -16384, +32767
+    samples = [0, 16384, -16384, 32767]
+    data = b"".join(struct.pack("<h", v) for v in samples)
+    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
+    wav = (
+        b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(data)) + b"WAVE"
+        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        + b"data" + struct.pack("<I", len(data)) + data
+    )
+    rows = [
+        (0, bytearray(wav), "audio/wav"),
+        (1, bytearray(b"\x00\x10"), "application/octet-stream"),
+    ]
+    media = spark.createDataFrame(rows, "media_id long, payload binary, mime string")
+    out = {r["media_id"]: r for r in extract_features(media).collect()}
+    ch, sr, dur, amp = out[0]["feature"]
+    assert (ch, sr) == (1.0, 8000.0)
+    assert dur == pytest.approx(4 / 8000.0)
+    want = (0 + 16384 / 32768 + 16384 / 32768 + 32767 / 32768) / 4
+    assert amp == pytest.approx(want)
+    assert len(out[1]["feature"]) == 16  # histogram fallback
+
+
+def test_wav_decoder_rejects_garbage():
+    from sparker_spark.llm.multimodal import decode_wav
+
+    with pytest.raises(ValueError):
+        decode_wav(b"OggS....")
+    with pytest.raises(ValueError):
+        decode_wav(b"RIFF\x00\x00\x00\x00WAVE")  # no chunks
 
 
 def test_streaming_interval_join_matches_batch(spark, tmp_path):
@@ -337,3 +479,42 @@ def test_windowed_counts_drop_late_rows(spark, tmp_path):
     # the late row's window never appears; closed early windows do
     assert "2026-03-31 18:00:00" not in starts
     assert "2026-04-01 00:00:00" in starts
+
+
+def test_resize_images_ppm(spark):
+    """Real media transform through mapInPandas: nearest-neighbor PPM
+    resize — downscale picks exact source pixels, upscale replicates
+    them, and the output payload is itself a valid P6 that round-trips
+    through the decoder."""
+    from sparker_spark.llm.multimodal import decode_ppm, resize_images
+
+    # 2x2: (255,0,0) (0,255,0) / (0,0,255) (255,255,255)
+    ppm = (
+        b"P6\n2 2\n255\n"
+        + bytes([255, 0, 0, 0, 255, 0, 0, 0, 255, 255, 255, 255])
+    )
+    media = spark.createDataFrame(
+        [(7, bytearray(ppm))], "media_id long, payload binary"
+    )
+
+    # 1x1: nearest-neighbor picks the top-left pixel
+    one = resize_images(media, 1, 1).collect()[0]
+    assert (one["width"], one["height"]) == (1, 1)
+    assert bytes(one["payload"]) == b"P6\n1 1\n255\n" + bytes([255, 0, 0])
+
+    # 4x4 upscale: each source pixel becomes a 2x2 block; the resized
+    # payload is valid PPM (decoder round-trip) with unchanged means
+    up = resize_images(media, 4, 4).collect()[0]
+    w, h, mr, mg, mb = decode_ppm(bytes(up["payload"]))
+    assert (w, h) == (4.0, 4.0)
+    assert mr == pytest.approx(510 / (4 * 255))
+    assert mg == pytest.approx(510 / (4 * 255))
+    assert mb == pytest.approx(510 / (4 * 255))
+
+
+def test_resize_images_rejects_bad_target(spark):
+    from sparker_spark.llm.multimodal import resize_images
+
+    media = spark.createDataFrame([], "media_id long, payload binary")
+    with pytest.raises(ValueError):
+        resize_images(media, 0, 4)
